@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 
 from big_data_training_spark.data import load_table
 from big_data_training_spark.registry import register
-from big_data_training_spark.streaming.replay import materialize
+from big_data_training_spark.session import pinned_session
+from big_data_training_spark.streaming.replay import materialize, reroot
 
 SCALE = 1_000_000_000_000  # rank fixed-point: 1.0 == 10^12
 N_ITER = 3
@@ -75,12 +76,6 @@ def _pagerank_oracle() -> str:
 COPART_PARTS = 32  # co-partitioning width; cluster deploys size to executors
 
 
-_pin_lock = __import__("threading").Lock()
-# One AQE-off clone per parent session, keyed weakly so a discarded
-# session's clone (and its SessionState) can be collected with it.
-_pin_sessions = __import__("weakref").WeakKeyDictionary()
-
-
 def _pinned_checkpoint(df: DataFrame) -> DataFrame:
     """localCheckpoint that *keeps* the DataFrame's hash partitioning.
 
@@ -91,23 +86,15 @@ def _pinned_checkpoint(df: DataFrame) -> DataFrame:
     Planning the checkpoint with AQE off pins the concrete
     HashPartitioning into the LogicalRDD; consumers still run under AQE.
 
-    AQE is disabled on a *cloned* session (same SparkContext, SharedState
-    and cache; isolated SQLConf copied from the parent — the mechanism
-    Structured Streaming uses for per-batch conf), never on the caller's
-    session, so concurrent unrelated queries keep planning under AQE.
-    The df's logical plan is re-rooted onto the clone for the one
-    checkpoint call; the pinned result is session-agnostic (a
-    materialized LogicalRDD) and is handed back on the parent session."""
+    AQE is disabled on a cached clone (session.pinned_session), never
+    on the caller's session, so concurrent unrelated queries keep
+    planning under AQE. The df's logical plan is re-rooted onto the
+    clone for the one checkpoint call; the pinned result is
+    session-agnostic (a materialized LogicalRDD) and is handed back on
+    the parent session."""
     spark = df.sparkSession
-    with _pin_lock:
-        jclone = _pin_sessions.get(spark)
-        if jclone is None:
-            jclone = spark._jsparkSession.cloneSession()
-            jclone.conf().set("spark.sql.adaptive.enabled", "false")
-            _pin_sessions[spark] = jclone
-    dataset_cls = spark._jvm.org.apache.spark.sql.classic.Dataset
-    jdf = dataset_cls.ofRows(jclone, df._jdf.logicalPlan())
-    return DataFrame(jdf.localCheckpoint(True), spark)
+    aqe_off = pinned_session(spark, {"spark.sql.adaptive.enabled": "false"})
+    return DataFrame(reroot(df, aqe_off)._jdf.localCheckpoint(True), spark)
 
 
 def pagerank_round(

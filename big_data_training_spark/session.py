@@ -20,6 +20,8 @@ multi-executor cluster):
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -81,13 +83,14 @@ def session_builder(
         # refuses to plan a pushFilters-implementing reader without this.
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )
-    # Deployment hook: extra SQL-conf pairs as "k=v;k=v" (or comma-
-    # separated). Scale-dependent knobs (AQE advisory size, coalescing
-    # mode, codec choices) stay parameterised per the engine's rule —
-    # local defaults above keep the bench comparable; a cluster deploy
-    # overrides here without code edits.
+    # Deployment hook: extra SQL-conf pairs as "k=v;k=v". Only ';'
+    # separates pairs, so a value may contain commas (class lists,
+    # extraJavaOptions). Scale-dependent knobs (AQE advisory size,
+    # coalescing mode, codec choices) stay parameterised per the
+    # engine's rule — local defaults above keep the bench comparable; a
+    # cluster deploy overrides here without code edits.
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for pair in extra.replace(",", ";").split(";"):
+    for pair in extra.split(";"):
         if "=" in pair:
             k, v = pair.split("=", 1)
             if k.strip():
@@ -111,3 +114,35 @@ def get_session(app_name: str = "big_data_training_spark") -> SparkSession:
     spark = session_builder(app_name, master=f"local[{DEFAULT_CPUS}]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_clone_lock = threading.Lock()
+# parent session -> {conf set: clone}. Weak on the parent, so a
+# discarded session's clones (and their SessionStates) go with it.
+_clones: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def pinned_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A cached CLONE of ``spark`` with ``conf`` set, one per (parent,
+    conf set). ``cloneSession`` shares the SparkContext, SharedState and
+    cache but copies the SQLConf (Spark SQL's per-session conf), so the
+    caller's session is never mutated — concurrent unrelated queries
+    keep planning under their own conf instead of racing a set/restore
+    window. Callers keep the number of distinct conf sets bounded."""
+    key = tuple(sorted(conf.items()))
+    with _clone_lock:
+        by_conf = _clones.setdefault(spark, {})
+        clone = by_conf.get(key)
+        if clone is None:
+            jclone = spark._jsparkSession.cloneSession()
+            for k, v in conf.items():
+                jclone.conf().set(k, v)
+            clone = SparkSession(spark.sparkContext, jsparkSession=jclone)
+            by_conf[key] = clone
+    return clone
+
+
+def is_pinned_session(spark: SparkSession) -> bool:
+    """Whether ``spark`` is a clone handed out by :func:`pinned_session`."""
+    with _clone_lock:
+        return any(spark in by_conf.values() for by_conf in _clones.values())

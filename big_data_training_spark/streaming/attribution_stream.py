@@ -133,6 +133,7 @@ def _apply_batch(credits_dir: str, state_dir: str):
         # write are independent outputs — overlap them (guide §2.6);
         # the manifest swap below still waits for BOTH.
         parallel_actions(
+            spark,
             lambda: latest.write.mode("overwrite").parquet(
                 os.path.join(credits_dir, "credits", f"epoch={epoch_id:06d}")
             ),

@@ -116,6 +116,7 @@ def _merge_batch(history_dir: str, state_dir: str):
         # outputs of the same union — overlap them (guide §2.6); the
         # manifest swap below still waits for BOTH
         parallel_actions(
+            spark,
             lambda: starts.write.mode("append").parquet(
                 os.path.join(history_dir, "versions")
             ),

@@ -123,6 +123,7 @@ def st_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         # of the same union — overlap them (guide §2.6); the manifest
         # swap below still happens only after BOTH committed
         parallel_actions(
+            sess,
             lambda: seq.filter(F.col("step3").isNotNull())
             .groupBy("step1", "step2", "step3")
             .agg(F.count("*").alias("n_paths"))

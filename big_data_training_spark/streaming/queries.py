@@ -364,18 +364,17 @@ def _j2_light(joined: DataFrame) -> DataFrame:
     3 reps each, 4-16-16-4-4-16 order) — a 1.6x win; the wider sweep
     read monotone 4 < 8 < 16 < 32. At cluster scale the same rule:
     size the pin to per-trigger volume, never to executor count — the
-    recorded source bytes feed the rule, whose floor is this sweep."""
+    plan's source bytes feed the rule, whose floor is this sweep."""
     from big_data_training_spark.streaming.replay import (
         light_stream_session,
         reroot,
-        take_recorded_trigger_bytes,
+        source_bytes,
     )
 
     return reroot(
         joined,
         light_stream_session(
-            joined.sparkSession,
-            trigger_bytes=take_recorded_trigger_bytes(),
+            joined.sparkSession, trigger_bytes=source_bytes(joined)
         ),
     )
 

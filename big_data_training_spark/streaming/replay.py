@@ -15,6 +15,7 @@ on separate threads from deleting each other's scratch space.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
@@ -22,6 +23,8 @@ import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from big_data_training_spark.session import is_pinned_session, pinned_session
 
 _scratch = threading.local()
 
@@ -41,7 +44,6 @@ def cleanup_scratch() -> None:
     dirs = getattr(_scratch, "dirs", [])
     while dirs:
         shutil.rmtree(dirs.pop(), ignore_errors=True)
-    _scratch.trigger_bytes = []
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -71,7 +73,6 @@ def cached_schema(read_df, path: str):
     return s
 
 
-_pinned_clones: dict[tuple, SparkSession] = {}
 _stream_lock = threading.Lock()
 
 # Replayed-topic memo: (canonicalized source plan, source-file
@@ -137,17 +138,13 @@ def cached_topic(df: DataFrame, label: str, prefix: str, build) -> str:
     plan does not identify the DATA, so two same-schema in-memory dfs
     would alias one topic — those build fresh every call instead."""
     if not df.inputFiles():
-        d = tempfile.mkdtemp(prefix=prefix)
+        # per-query scratch: cleaned after the calling query materializes
+        d = scratch_dir(prefix)
         try:
             build(d)
         except BaseException:
             shutil.rmtree(d, ignore_errors=True)
             raise
-        # tracked like any other per-query scratch: cleaned after the
-        # calling query materializes
-        if not hasattr(_scratch, "dirs"):
-            _scratch.dirs = []
-        _scratch.dirs.append(d)
         return d
     key = _topic_key(df, label)
     with _stream_lock:
@@ -183,7 +180,7 @@ def cached_topic(df: DataFrame, label: str, prefix: str, build) -> str:
 # untuned session's default 200 that is pure startup overhead per
 # micro-batch, so streaming helpers plan under a SIZED pin:
 #
-#     pin = clamp(ceil(per_trigger_bytes / TARGET_BYTES_PER_TASK),
+#     pin = clamp(pow2ceil(ceil(per_trigger_bytes / TARGET_BYTES_PER_TASK)),
 #                 floor, cap)
 #
 # The volume term is the cluster rule (size the pin to per-trigger
@@ -198,6 +195,9 @@ def cached_topic(df: DataFrame, label: str, prefix: str, build) -> str:
 # rows — streaming state tasks want smaller partitions than the
 # 100 MB-1 GB batch guidance because every partition also pays a state
 # store); the cap bounds task explosion for pathological volumes.
+# Rounding up to a power of two (floors and cap are powers of two too)
+# bounds the distinct pins — one cached clone each — to about a dozen
+# per parent session.
 _STREAM_PIN_FLOOR = 16
 _LIGHT_STREAM_PIN_FLOOR = 4
 _STREAM_PIN_CAP = 4096
@@ -209,17 +209,8 @@ def pin_for_trigger_bytes(n_bytes: int | None, floor: int) -> str:
     volume one trigger delivers; ``None``/0 means unknown → floor."""
     if not n_bytes or n_bytes <= 0:
         return str(floor)
-    import math
-
-    return str(
-        max(
-            floor,
-            min(
-                _STREAM_PIN_CAP,
-                math.ceil(n_bytes / _TARGET_TRIGGER_BYTES_PER_TASK),
-            ),
-        )
-    )
+    tasks = -(-n_bytes // _TARGET_TRIGGER_BYTES_PER_TASK)
+    return str(max(floor, min(_STREAM_PIN_CAP, 1 << (tasks - 1).bit_length())))
 
 
 def max_segment_bytes(topic_dir: str) -> int:
@@ -233,72 +224,69 @@ def max_segment_bytes(topic_dir: str) -> int:
     return max(sizes, default=0)
 
 
-# Per-thread record of the source fixture bytes behind topics built by
-# ``read_stream_table`` on this thread — ``run_to_completion`` (same
-# thread, immediately after the query is assembled) sums it as the
-# bounded replay's single-trigger volume. Cleared on consumption and by
-# ``cleanup_scratch`` so one query's volume never leaks into the next.
-def _record_trigger_bytes(n: int) -> None:
-    if not hasattr(_scratch, "trigger_bytes"):
-        _scratch.trigger_bytes = []
-    _scratch.trigger_bytes.append(n)
-
-
-def take_recorded_trigger_bytes() -> int:
-    vols = getattr(_scratch, "trigger_bytes", [])
-    total = sum(vols)
-    _scratch.trigger_bytes = []
+def source_bytes(df: DataFrame) -> int:
+    """Per-trigger volume of a bounded replay: the total size of the
+    files behind every file-stream source leaf (``StreamingRelation``)
+    of ``df``'s analyzed plan — a bounded replay delivers each source
+    whole as ONE micro-batch. Leaves are counted, not distinct paths,
+    so a self-joined topic counts once per side. Non-file sources add
+    nothing (→ the pin floor)."""
+    total = 0
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if not leaf.getClass().getName().endswith(".StreamingRelation"):
+            continue
+        path = leaf.dataSource().options().get("path")
+        if path.isEmpty():
+            continue
+        for p in glob.glob(path.get()):
+            # a directory's files, less those the file source skips as
+            # hidden (_SUCCESS, .crc)
+            files = [p] if os.path.isfile(p) else [
+                os.path.join(root, f)
+                for root, _, names in os.walk(p)
+                for f in names
+                if not f.startswith(("_", "."))
+            ]
+            total += sum(map(os.path.getsize, files))
     return total
 
 
-def pinned_clone(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
-    """A cached CLONE of ``spark`` with ``conf`` pinned, keyed by
-    (parent, conf set). Same isolation mechanism as the batch pin
-    session (extensions/graph.py): ``cloneSession`` copies the SQLConf
-    (shared SparkContext and cache), so the caller's shared session is
-    never mutated — concurrent unrelated queries keep planning under
-    their own conf instead of racing a set/restore window.
+# Streaming defaults merged under every streaming clone's conf (the
+# caller's value wins). RocksDB changelog checkpointing for the reason
+# it is production guidance: without it every micro-batch commit
+# uploads a full per-partition snapshot (zip + fsync dominated w6's
+# addBatch profile — 13.7s → 11.7s measured at sf0.1 with identical
+# values); with it the per-batch upload is the small changelog and
+# snapshots amortize. Row tracking off: with it on (default), EVERY
+# state put/delete performs a RocksDB read first just to maintain the
+# numRowsTotal metric — the standard production setting for
+# write-heavy state is off (the metric reports -1; nothing in the
+# engine or tests reads it, and probe tools build their own sessions).
+_STREAM_CONF_DEFAULTS = {
+    "spark.sql.streaming.stateStore.rocksdb."
+    "changelogCheckpointing.enabled": "true",
+    "spark.sql.streaming.stateStore.rocksdb."
+    "trackTotalNumberOfRows": "false",
+}
+
+
+def streaming_clone(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """The cached clone of ``spark`` (session.pinned_session) with the
+    streaming defaults under ``conf``, which must carry the
+    ``spark.sql.shuffle.partitions`` pin: ``run_to_completion`` runs any
+    pinned clone as-is, so a clone without the pin would silently lose
+    the task-count invariant the state-operator replays rely on.
 
     StreamingQueryListeners are per-session (each SessionState owns a
     StreamingQueryManager), so U4 listeners the user registered on the
     PARENT are mirrored onto the clone on every fetch — a query running
-    here still fires the user's lifecycle callbacks.
-
-    The streaming shuffle-partition pin is merged into every conf set
-    (caller's value wins if present): ``run_to_completion`` treats any
-    pinned clone as ready-to-run, so a clone built without the pin
-    would silently lose the task-count invariant the state-operator
-    replays rely on. RocksDB changelog checkpointing is merged in for
-    the same reason it is production guidance: without it every
-    micro-batch commit uploads a full per-partition snapshot
-    (zip + fsync dominated w6's addBatch profile — 13.7s → 11.7s
-    measured at sf0.1 with identical values); with it the per-batch
-    upload is the small changelog and snapshots amortize."""
-    conf = {
-        "spark.sql.shuffle.partitions": str(_STREAM_PIN_FLOOR),
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
-        # with tracking on (default), EVERY state put/delete performs a
-        # RocksDB read first just to maintain the numRowsTotal metric —
-        # the standard production setting for write-heavy state is off
-        # (the metric reports -1; nothing in the engine or tests reads
-        # it, and probe tools build their own sessions). Caller's value
-        # still wins, so a metrics-focused session can re-enable it.
-        "spark.sql.streaming.stateStore.rocksdb."
-        "trackTotalNumberOfRows": "false",
-        **conf,
-    }
-    key = (spark, tuple(sorted(conf.items())))
+    here still fires the user's lifecycle callbacks."""
+    clone = pinned_session(spark, {**_STREAM_CONF_DEFAULTS, **conf})
     with _stream_lock:
-        s = _pinned_clones.get(key)
-        if s is None:
-            jclone = spark._jsparkSession.cloneSession()
-            for k, v in conf.items():
-                jclone.conf().set(k, v)
-            s = SparkSession(spark.sparkContext, jsparkSession=jclone)
-            _pinned_clones[key] = s
-        _sync_listeners(spark, s)
-    return s
+        _sync_listeners(spark, clone)
+    return clone
 
 
 def stream_session(
@@ -309,14 +297,8 @@ def stream_session(
     operators (applyInPandasWithState — w6) are compute-bound and the
     knee of per-partition fixed costs (state-store load/commit, timer
     scan) sits at 16 (2=26.4s, 4=16.9s, 16=12.2s, 32=14.6s)."""
-    return pinned_clone(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": pin_for_trigger_bytes(
-                trigger_bytes, _STREAM_PIN_FLOOR
-            )
-        },
-    )
+    pin = pin_for_trigger_bytes(trigger_bytes, _STREAM_PIN_FLOOR)
+    return streaming_clone(spark, {"spark.sql.shuffle.partitions": pin})
 
 
 def light_stream_session(
@@ -328,17 +310,11 @@ def light_stream_session(
     are task-startup-bound — pin 4 beats 16 by 15-20% on st_cms/
     st_path_trigrams/st_ewma, and the st_j2 stream-stream joins read
     monotone 4 < 8 < 16 < 32 (docs/SCALING.md)."""
-    return pinned_clone(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": pin_for_trigger_bytes(
-                trigger_bytes, _LIGHT_STREAM_PIN_FLOOR
-            )
-        },
-    )
+    pin = pin_for_trigger_bytes(trigger_bytes, _LIGHT_STREAM_PIN_FLOOR)
+    return streaming_clone(spark, {"spark.sql.shuffle.partitions": pin})
 
 
-def parallel_actions(*thunks) -> None:
+def parallel_actions(spark: SparkSession, *thunks) -> None:
     """Run independent Spark actions concurrently (guide §2.6 "overlap
     independent jobs"): inside a foreachBatch the cost of each small
     write job is dominated by scheduling + file-commit latency, and two
@@ -346,14 +322,16 @@ def parallel_actions(*thunks) -> None:
     can back-fill each other's idle capacity instead of serializing.
     Caller sequencing stays intact: this returns only after EVERY action
     finished, and re-raises the first failure — so a manifest swap placed
-    after it keeps exactly the commit semantics of sequential writes."""
+    after it keeps exactly the commit semantics of sequential writes.
+    Each thread inherits ``spark``'s job tags and the caller's local
+    properties (job group, description)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [
-            pool.submit(inheritable_thread_target(t)) for t in thunks
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
         ]
         for f in futures:
             f.result()
@@ -399,10 +377,6 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from big_data_training_spark.data import _read_parquet_nanosafe, canonicalize_ts
 
     schema = cached_schema(lambda: _read_parquet_nanosafe(spark, path), path)
-    # Bounded replay delivers the whole fixture as ONE micro-batch, so
-    # the fixture size IS this source's per-trigger volume; recorded for
-    # the pin rule (run_to_completion / _j2_light consume it).
-    _record_trigger_bytes(os.path.getsize(path))
     # The file stream source wants a directory to monitor (a "topic"
     # directory into which new log segments land); expose the fixture
     # file through a scratch dir of symlinks.
@@ -416,45 +390,46 @@ def run_to_completion(
 ) -> DataFrame:
     """Start result → memory sink, process all available input, stop, and
     return the sink contents (materialized — the memory-sink view and all
-    scratch dirs this thread created are cleaned before returning).
+    scratch dirs this thread created are cleaned before returning, and
+    also when the query fails).
     Bounded input arrives as one micro-batch (file source picks up every
     available file at the first trigger), so complete/update-mode output
     is deterministic.
 
     The query runs on a pinned-conf CLONE of the caller's session
-    (see ``stream_session``) — the shared session's conf is never
-    touched; the memory-sink view lives (and is dropped) on the clone,
-    and the materialized result is session-agnostic. A plan already
-    rooted on a pinned clone (e.g. statestore.rocksdb_stream_session)
-    runs there as-is — no clone-of-clone.
+    (see ``stream_session``), its pin sized by ``source_bytes(result)``;
+    the shared session's conf is never touched. The memory-sink view
+    lives (and is dropped) on the clone, and the materialized result is
+    session-agnostic. A plan already rooted on a pinned clone (e.g.
+    statestore.rocksdb_stream_session) runs there as-is — no
+    clone-of-clone.
     """
     spark = result.sparkSession
-    with _stream_lock:
-        already_pinned = any(spark is v for v in _pinned_clones.values())
-    if already_pinned:
+    if is_pinned_session(spark):
         ss = spark
     else:
-        ss = stream_session(spark, trigger_bytes=take_recorded_trigger_bytes())
+        ss = stream_session(spark, trigger_bytes=source_bytes(result))
         result = reroot(result, ss)
     qname = f"sink_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch_dir("bdts_ckpt_")
-    query = (
-        result.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
     try:
-        query.processAllAvailable()
-        # queries the caller overlapped with this one (guide §2.6) must
-        # finish before the shared scratch topics are cleaned below;
-        # stopping them stays the caller's job
-        for other in await_also:
-            other.processAllAvailable()
+        query = (
+            result.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(qname)
+            .option("checkpointLocation", scratch_dir("bdts_ckpt_"))
+            .start()
+        )
+        try:
+            query.processAllAvailable()
+            # queries the caller overlapped with this one (guide §2.6)
+            # must finish before the shared scratch topics are cleaned
+            # below; stopping them stays the caller's job
+            for other in await_also:
+                other.processAllAvailable()
+        finally:
+            query.stop()
+        return materialize(ss.table(qname))
     finally:
-        query.stop()
-    out = materialize(ss.table(qname))
-    ss.catalog.dropTempView(qname)
-    cleanup_scratch()
-    return out
+        # success or failure: no sink view or scratch dir outlives the call
+        ss.catalog.dropTempView(qname)
+        cleanup_scratch()

@@ -79,6 +79,7 @@ def st_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the cell partial and the probe-panel partial are independent
         # appends from the same batch — overlap them (guide §2.6)
         parallel_actions(
+            batch_df.sparkSession,
             lambda: _cms_cells(batch_df)
             .write.mode("append")
             .parquet(os.path.join(partials_dir, "cells")),

@@ -18,8 +18,8 @@ heap-backed default. The provider conf is read (and recorded in the
 offset log) at query start from the session that starts the query;
 pinning it on a clone means no set/restore window ever exists on the
 shared session — a concurrent query cannot observe the RocksDB keys
-(the round-6/7 conf-isolation pattern, streaming/replay.py
-``pinned_clone``).
+(the conf-isolation pattern of session.pinned_session, via
+streaming/replay.py ``streaming_clone``).
 """
 
 from __future__ import annotations
@@ -30,30 +30,31 @@ from pyspark.sql import functions as F
 from big_data_training_spark.registry import register
 from big_data_training_spark.streaming.replay import (
     _STREAM_PIN_FLOOR,
-    pinned_clone,
+    cleanup_scratch,
+    materialize,
     read_stream_table,
     reroot,
     run_to_completion,
+    scratch_dir,
+    stream_session,
+    streaming_clone,
 )
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-_CHANGELOG_KEY = (
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-)
 
 
 def rocksdb_stream_session(spark: SparkSession) -> SparkSession:
     """Cached clone of ``spark`` with the RocksDB provider, changelog
-    checkpointing, and the streaming shuffle-partition pin — queries
-    started from it get RocksDB state without mutating the parent."""
-    return pinned_clone(
+    checkpointing (a streaming default), and the streaming
+    shuffle-partition pin — queries started from it get RocksDB state
+    without mutating the parent."""
+    return streaming_clone(
         spark,
         {
             _PROVIDER_KEY: ROCKSDB_PROVIDER,
-            _CHANGELOG_KEY: "true",
             "spark.sql.shuffle.partitions": str(_STREAM_PIN_FLOOR),
         },
     )
@@ -97,15 +98,6 @@ def st_state_store_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     migrate, or debug billions of keys of streaming state offline
     (partition-parallel read of the store files, no query restart)."""
     import uuid
-
-    from big_data_training_spark.streaming.replay import (
-        cleanup_scratch,
-        materialize,
-        read_stream_table,
-        reroot,
-        scratch_dir,
-        stream_session,
-    )
 
     # Runs on a pinned-conf clone (streaming/replay.py stream_session)
     # so the shared session's shuffle.partitions is never mutated.

@@ -40,8 +40,8 @@ def main() -> None:
         read_stream_table,
         reroot,
         scratch_dir,
+        source_bytes,
         stream_session,
-        take_recorded_trigger_bytes,
     )
 
     eval_sh = (
@@ -72,7 +72,7 @@ def main() -> None:
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_hit_shingles"))
     )
-    ss = stream_session(spark, trigger_bytes=take_recorded_trigger_bytes())
+    ss = stream_session(spark, trigger_bytes=source_bytes(hits))
     hits = reroot(hits, ss)
     ckpt = scratch_dir("bdts_snap_decon_")
     q = (
